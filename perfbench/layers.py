@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import statistics
+import sys
 import time
 from collections.abc import Iterator
 
@@ -33,6 +34,7 @@ from hadoop_etl_udfs_spark.operators.dedup import (
     minhash_signatures,
 )
 from hadoop_etl_udfs_spark.operators.encode import (
+    _chunk_id,
     decode_chunks_colocated,
     encode_pages,
     salted_partitioning,
@@ -43,11 +45,10 @@ from hadoop_etl_udfs_spark.plans.lineage import (
     cluster_ranges_keep_predicate,
     read_encoded,
     read_encoded_colocated,
-    read_manifest,
     write_encoded,
 )
 
-from .spec import CODECS, PAGE_COLUMNS
+from .spec import PAGE_COLUMNS
 from .trace import Tracer
 from .workloads import ENCODE_ARGS, Dedup, Ingest, Lookup, Scan, fingerprint
 
@@ -74,18 +75,23 @@ def _select_codec(col: pa.Array, name: str) -> str:
 
 _ENCODE_PROBE = pa.schema(
     [(f"encode_{c}", pa.float64()) for c in PAGE_COLUMNS]
-    + [("select", pa.float64()), ("block", pa.float64()), ("bloom", pa.float64())]
+    + [("select", pa.float64()), ("block", pa.float64()), ("bloom", pa.float64()),
+       ("chunk_id", pa.float64())]
 )
 _ENCODE_PROBE_DDL = ", ".join(f"{n} double" for n in _ENCODE_PROBE.names)
 
 
 def _encode_probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Per chunk: codec selection, the codec itself (``encode_array``), the
-    block stage (re-packing the unpacked sections) and the url Bloom
-    filter, each timed on its own."""
+    """Per chunk: the content hash that names it (``_chunk_id``), codec
+    selection, the codec itself (``encode_array``), the block stage
+    (re-packing the unpacked sections) and the url Bloom filter, each timed
+    on its own."""
     clock = time.perf_counter
     for b in batches:
         row = {f: 0.0 for f in _ENCODE_PROBE.names}
+        t0 = clock()
+        _chunk_id(b)
+        row["chunk_id"] = clock() - t0
         for name in b.schema.names:
             col = b.column(name)
             t0 = clock()
@@ -144,62 +150,88 @@ def _sums(df: DataFrame) -> dict:
     return df.agg(*[F.sum(c).alias(c) for c in df.columns]).collect()[0].asDict()
 
 
+def _reconcile(name: str, layers: float, wall: float) -> float:
+    """How far the layer walls' sum is from the end-to-end wall, as a share
+    of the wall (0 is a perfect reconciliation)."""
+    print(f"perfbench: {name} layer sum / wall = {layers / wall:.3f}", file=sys.stderr)
+    return abs(layers / wall - 1)
+
+
+# Each wall of the ingest and scan splits is the median of this many runs: a
+# single Spark job's wall varies by 10-20% from one run to the next.
+REPS = 3
+
+
+def _wall(tracer: Tracer, name: str, fn) -> float:
+    """Median seconds of REPS runs of ``fn``, each under a span ``name``."""
+    times = []
+    for _ in range(REPS):
+        with tracer.span(name) as s:
+            fn()
+        times.append(s.seconds)
+    return statistics.median(times)
+
+
 def ingest_layers(tracer: Tracer, ing: Ingest, work: str) -> tuple[dict, list[str]]:
     """EXPORT split into scan -> salted shuffle -> encode kernel -> sink, the
-    kernel's floor and chunk-id share, and the codec stages."""
+    kernel's floor, and the codec stages with the chunk-id hash."""
     spark, pages = ing.spark, ing.pages
-    m: dict[str, float] = {}
     problems: list[str] = []
-    with tracer.span("ingest.wall") as wall:
-        ing.run(0, tracer)
+
+    wall = _wall(tracer, "ingest.wall", lambda: ing.run(0, tracer))
     problems += ing.check(None, 0)
-    with tracer.span("sources.read_iceberg>noop") as scan:
-        _noop(pages.read())
-    with tracer.span("operators.encode.salted_partitioning>noop") as shuffle:
-        _noop(salted_partitioning(pages.read(), ENCODE_ARGS["salt_buckets"]))
+    scan = _wall(tracer, "sources.read_iceberg>noop", lambda: _noop(pages.read()))
+    shuffle = _wall(
+        tracer, "operators.encode.salted_partitioning>noop",
+        lambda: _noop(salted_partitioning(pages.read(), ENCODE_ARGS["salt_buckets"])),
+    ) - scan
     prepart = salted_partitioning(pages.read(), ENCODE_ARGS["salt_buckets"]).cache()
     prepart.count()
     kernel_args = {"shuffle": False, "cluster_by": ENCODE_ARGS["cluster_by"], "bloom_by": ENCODE_ARGS["bloom_by"]}
-    with tracer.span("encode.arrow_transfer>noop") as transfer:
-        _noop(prepart.mapInArrow(_count_batches, "n long"))
-    with tracer.span("operators.encode.encode_pages(shuffle=False)>noop") as kernel:
-        _noop(encode_pages(prepart, **kernel_args))
+    transfer = _wall(
+        tracer, "encode.arrow_transfer>noop",
+        lambda: _noop(prepart.mapInArrow(_count_batches, "n long")),
+    )
+    kernel = _wall(
+        tracer, "operators.encode.encode_pages(shuffle=False)>noop",
+        lambda: _noop(encode_pages(prepart, **kernel_args)),
+    )
+    # the sink's own cost: writing the cached chunks, less reading them
     enc = encode_pages(prepart, **kernel_args).cache()
     enc.count()
-    with tracer.span("plans.lineage.write_encoded(cached)") as sink:
-        write_encoded(enc, os.path.join(work, "layers_sink"), mode="overwrite")
-    ids = {r[0] for r in read_manifest(spark, ing.sink).select("chunk_id").distinct().collect()}
-    with tracer.span("operators.encode.encode_pages(skip every chunk)") as skip:
-        left = encode_pages(prepart, skip_chunk_ids=ids, **kernel_args).count()
-    if left:
-        problems.append(f"skip-all encode still emitted {left} chunk rows")
+    sink = _wall(
+        tracer, "plans.lineage.write_encoded(cached)",
+        lambda: write_encoded(enc, os.path.join(work, "layers_sink"), mode="overwrite"),
+    ) - _wall(tracer, "cached chunks>noop", lambda: _noop(enc))
+    enc.unpersist()
     with tracer.span("codecs.encode_probe"):
         probe = _sums(prepart.mapInArrow(_encode_probe, _ENCODE_PROBE_DDL))
-    enc.unpersist()
     prepart.unpersist()
 
-    shuffle_s = shuffle.seconds - scan.seconds
-    m["ingest.wall_s"] = wall.seconds
-    m["ingest.scan_s"] = scan.seconds
-    m["ingest.shuffle_s"] = shuffle_s
-    m["ingest.kernel_s"] = kernel.seconds
-    m["ingest.sink_s"] = sink.seconds
-    m["ingest.layer_sum_over_wall"] = (
-        scan.seconds + shuffle_s + kernel.seconds + sink.seconds
-    ) / wall.seconds
-    m["encode.arrow_transfer_s"] = transfer.seconds
-    m["encode.chunk_id_s"] = skip.seconds - transfer.seconds
+    # codec selection and the block stage run inside encode_array; the
+    # share is of the wall the ingest would take at full parallelism
+    codec_s = sum(probe[f"encode_{c}"] for c in PAGE_COLUMNS) + probe["bloom"] + probe["chunk_id"]
+    mix = ing.counts["codec_mix"]
+    m = {
+        "ingest.wall_s": wall,
+        "ingest.scan_s": scan,
+        "ingest.shuffle_s": shuffle,
+        "ingest.kernel_s": kernel,
+        "ingest.sink_s": sink,
+        "ingest.layer_sum_gap": _reconcile("ingest", scan + shuffle + kernel + sink, wall),
+        "ingest.kernel_share": kernel / wall,
+        "ingest.codec_share": codec_s / (spark.sparkContext.defaultParallelism * wall),
+        "encode.arrow_transfer_s": transfer,
+        "encode.chunk_id_s": probe["chunk_id"],
+        "codecs.select_s": probe["select"],
+        "codecs.block_s": probe["block"],
+        "bloom.build_s": probe["bloom"],
+        "encode.chunks": ing.counts["chunks"],
+        "codecs.nonraw_frac": 1 - mix.get("raw", 0) / sum(mix.values()),
+    }
     for c in PAGE_COLUMNS:
         m[f"codecs.encode_s.{c}"] = probe[f"encode_{c}"]
-    m["codecs.select_s"] = probe["select"]
-    m["codecs.block_s"] = probe["block"]
-    m["bloom.build_s"] = probe["bloom"]
-    counts = ing.counts
-    m["encode.chunks"] = counts["chunks"]
-    for c in CODECS:
-        m[f"codecs.mix.{c}"] = counts["codec_mix"].get(c, 0)
-    for c in PAGE_COLUMNS:
-        m[f"codecs.ratio.{c}"] = counts["bytes_in"][c] / counts["bytes_out"][c]
+        m[f"codecs.ratio.{c}"] = ing.counts["bytes_in"][c] / ing.counts["bytes_out"][c]
     return m, problems
 
 
@@ -208,20 +240,22 @@ def scan_layers(tracer: Tracer, scan: Scan) -> tuple[dict, list[str]]:
     codec stages of decode."""
     spark = scan.spark
     problems: list[str] = []
-    with tracer.span("scan.wall") as wall:
-        out = scan.run(0, tracer)
-    problems += scan.check(out, 0)
-    with tracer.span("plans.lineage.read_encoded_colocated>noop") as read:
-        _noop(read_encoded_colocated(spark, scan.sink))
+    wall = _wall(tracer, "scan.wall", lambda: problems.extend(scan.check(scan.run(0, tracer), 0)))
+    read = _wall(
+        tracer, "plans.lineage.read_encoded_colocated>noop",
+        lambda: _noop(read_encoded_colocated(spark, scan.sink)),
+    )
     enc = read_encoded_colocated(spark, scan.sink).cache()
     enc.count()
-    with tracer.span("operators.encode.decode_chunks_colocated(cached)>noop") as decode:
-        _noop(decode_chunks_colocated(enc))
+    decode = _wall(
+        tracer, "operators.encode.decode_chunks_colocated(cached)>noop",
+        lambda: _noop(decode_chunks_colocated(enc)),
+    )
     dec = decode_chunks_colocated(enc).cache()
     dec.count()
-    with tracer.span("scan.fingerprint(cached)") as consume:
-        fp = fingerprint(dec)
-    problems += scan.check(fp, 0)
+    consume = _wall(
+        tracer, "scan.fingerprint(cached)", lambda: problems.extend(scan.check(fingerprint(dec), 0))
+    )
     with tracer.span("codecs.decode_probe"):
         probe = _sums(read_encoded_colocated(spark, scan.sink).mapInArrow(_decode_probe, _DECODE_PROBE_DDL))
     dec.unpersist()
@@ -232,11 +266,15 @@ def scan_layers(tracer: Tracer, scan: Scan) -> tuple[dict, list[str]]:
     if probe["bad_crc"]:
         problems.append(f"{probe['bad_crc']} decoded column chunks failed their CRC")
     m = {
-        "scan.wall_s": wall.seconds,
-        "scan.read_s": read.seconds,
-        "scan.decode_s": decode.seconds,
-        "scan.consume_s": consume.seconds,
-        "scan.layer_sum_over_wall": (read.seconds + decode.seconds + consume.seconds) / wall.seconds,
+        "scan.wall_s": wall,
+        "scan.read_s": read,
+        "scan.decode_s": decode,
+        "scan.consume_s": consume,
+        "scan.layer_sum_gap": _reconcile("scan", read + decode + consume, wall),
+        "scan.decode_share": decode / wall,
+        # the frame unpack runs inside decode_array
+        "scan.codec_share": (sum(probe[f"decode_{c}"] for c in PAGE_COLUMNS) + probe["crc"])
+        / (spark.sparkContext.defaultParallelism * wall),
         "codecs.unpack_s": probe["unpack"],
         "codecs.verify_crc_s": probe["crc"],
     }
@@ -279,10 +317,10 @@ def lookup_layers(tracer: Tracer, lk: Lookup) -> tuple[dict, list[str]]:
         m[f"lookup.{kind}.decode_s"] = statistics.median(a["rest"])
         m[f"lookup.{kind}.spark_jobs"] = sum(a["jobs"]) / n
         m[f"lookup.{kind}.chunks_kept_frac"] = sum(a["kept"]) / (n * total)
-    # each url is in exactly one chunk: every other kept chunk is a false
-    # positive of the Bloom filters
+    # each url is in exactly one chunk, which pruning always keeps: every
+    # other kept chunk is a false positive of the Bloom filters
     kept = acc["bloom"]["kept"]
-    m["lookup.bloom_fp_frac"] = sum(k - 1 for k in kept) / sum(kept)
+    m["lookup.bloom.precision"] = len(kept) / sum(kept)
     return m, problems
 
 
@@ -297,7 +335,8 @@ def dedup_layers(tracer: Tracer, dd: Dedup) -> tuple[dict, list[str]]:
     stats: dict = {}
     with tracer.span("operators.dedup.duplicate_clusters_star>checkpoint") as cc_s:
         clusters = duplicate_clusters_star(pairs, stats=stats).localCheckpoint()
-    problems += dd.check(clusters, stats)
+    together, dedup_problems = dd.check(pairs, clusters, stats)
+    problems += dedup_problems
     candidates = pairs.count()
     found = pairs.join(
         dd.planted, (F.col("doc_a") == F.col("a")) & (F.col("doc_b") == F.col("b"))
@@ -309,5 +348,6 @@ def dedup_layers(tracer: Tracer, dd: Dedup) -> tuple[dict, list[str]]:
         "dedup.candidate_pairs": candidates,
         "dedup.pair_precision": found / candidates if candidates else 0.0,
         "dedup.recall": found / dd.n_planted,
+        "dedup.planted_together_frac": together / dd.n_planted,
         "dedup.cc_alternations": stats["alternations"],
     }, problems

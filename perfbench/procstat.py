@@ -1,4 +1,4 @@
-"""This process's tree, read from ``/proc``: its peak resident memory and
+"""This process's tree, read from ``/proc``: its resident memory and
 waiting for it to end."""
 
 from __future__ import annotations
@@ -35,22 +35,23 @@ def descendants(pid: int | None = None) -> list[int]:
     return found
 
 
-def _hwm_kb(pid: int) -> int:
+def _pss_kb(pid: int) -> int:
     try:
-        with open(f"/proc/{pid}/status") as f:
+        with open(f"/proc/{pid}/smaps_rollup") as f:
             for line in f:
-                if line.startswith("VmHWM:"):
+                if line.startswith("Pss:"):
                     return int(line.split()[1])
-    except OSError:
+    except OSError:  # the process ended
         pass
     return 0
 
 
-def tree_peak_rss_mb() -> float:
-    """Sum of the peak resident set (VmHWM) of this process and every live
-    descendant: the driver, the JVM and Spark's Python workers. Pages shared
-    between forked workers are counted once per process."""
-    return sum(_hwm_kb(p) for p in [os.getpid(), *descendants()]) / 1024
+def tree_pss_mb() -> float:
+    """Proportional resident set (Pss) of this process and every live
+    descendant, summed: the driver, the JVM and Spark's Python workers. A
+    page shared by n processes counts 1/n in each, so pages the forked
+    workers share with their daemon are counted once."""
+    return sum(_pss_kb(p) for p in [os.getpid(), *descendants()]) / 1024
 
 
 def _alive(pid: int) -> bool:

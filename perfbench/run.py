@@ -9,8 +9,8 @@ Run from the root of a source checkout. The benchmark makes its inputs from
 output, one JSON object with the keys ``correct``, ``attempted``, ``failed``
 and ``metrics``.
 
-- ``--trace 0``: the end-to-end metrics of the workload (spec.END_TO_END).
-- ``--trace 1``: the per-layer metrics (spec.PER_LAYER). This builds the
+- ``--trace 0``: the end-to-end metrics of ``BENCHMARK.json``.
+- ``--trace 1``: its per-layer metrics. This builds the
   inputs of both workloads and of the lookup and dedup layer studies, runs
   the layer study of layers.py, then the chosen workload's loop with
   tracing on for every other operation, so the tracing overhead is
@@ -26,6 +26,7 @@ and waits for every process it started before it exits.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import shutil
@@ -36,18 +37,29 @@ import traceback
 import uuid
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOADS = ("ingest", "scan")
+if ROOT not in sys.path:
+    sys.path.insert(0, ROOT)
+
+from perfbench import spec  # noqa: E402
+from perfbench.procstat import tree_pss_mb  # noqa: E402
+
 # untimed operations after the first, before the measured loop
 WARMUP_SECONDS = 4.0
-# Heap of the driver JVM. The inputs at scale 1 are ~50 MB; a small heap is
-# used up early and then stays resident, which keeps peak_rss_mb steady
-# (measured on scan: run-to-run spread 0.21 with 3g, 0.08 with 1g).
-DRIVER_MEM = "1g"
+# Heap of the driver JVM, sized from a measured need rather than the engine's
+# default (24g), which the JVM fills at its own pace, so that its resident
+# set would depend on how long a run lasts. Measured on a 4-core box at
+# scale 1: the live heap after a full GC is 95-110 MB; with 512m rather
+# than 1g the operation times agree within their noise, GC takes ~1.4 s
+# instead of ~1.1 s of a 40 s run, and the JVM's resident set varies by
+# ~60 MB between runs instead of ~250 MB. The JVM's share of peak_rss_mb is
+# therefore close to this cap plus its off-heap memory; a heap regression
+# shows in the traced run's jvm.gc_s and jvm.heap_peak_mb.
+DRIVER_MEM = "512m"
 
 
 def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    p.add_argument("--workload", required=True, choices=WORKLOADS)
+    p.add_argument("--workload", required=True, choices=spec.WORKLOADS)
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -137,10 +149,14 @@ def attempt(tally: Tally, what: str, fn):
     return out
 
 
-def closed_loop(wl, seconds: float, tracers: list, tally: Tally) -> list[list[float]]:
+def closed_loop(
+    wl, seconds: float, tracers: list, tally: Tally, memory: list | None = None
+) -> list[list[float]]:
     """Run ``wl`` back to back for ``seconds`` (at least once per tracer),
     operation i under ``tracers[i % len(tracers)]``. Returns the latencies
-    in seconds of the operations that completed, one list per tracer."""
+    in seconds of the operations that completed, one list per tracer.
+    With ``memory``, the process tree's resident set is sampled into it
+    after every operation (outside the timed part)."""
     lat: list[list[float]] = [[] for _ in tracers]
 
     def one(i: int):
@@ -153,6 +169,8 @@ def closed_loop(wl, seconds: float, tracers: list, tally: Tally) -> list[list[fl
     i = 0
     while i < len(tracers) or time.perf_counter() < end:
         attempt(tally, f"{wl.name} operation {i}", lambda: one(i))
+        if memory is not None:
+            memory.append(tree_pss_mb())
         i += 1
     return lat
 
@@ -176,8 +194,29 @@ def guard_counts(path: str, counts: dict | None) -> list[str]:
     return []
 
 
+def code_version(root: str = ROOT) -> str:
+    """Hash of the engine's and the benchmark's Python sources. The
+    determinism record is kept per version of the code, so that only runs
+    of the same code must agree: a change that alters the stored bytes or
+    the codec mix starts a record of its own."""
+    h = hashlib.sha256()
+    for top in ("hadoop_etl_udfs_spark", "perfbench"):
+        for d, dirs, files in os.walk(os.path.join(root, top)):
+            dirs[:] = sorted(x for x in dirs if x != "__pycache__")
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    path = os.path.join(d, f)
+                    h.update(os.path.relpath(path, root).encode() + b"\0")
+                    with open(path, "rb") as fh:
+                        h.update(fh.read())
+    return h.hexdigest()[:16]
+
+
 def counts_record(name: str, args) -> str:
-    return os.path.join(ROOT, ".perfbench_out", "counts", f"{name}-seed{args.seed}-scale{args.scale:g}.json")
+    return os.path.join(
+        ROOT, ".perfbench_out", "counts", code_version(),
+        f"{name}-seed{args.seed}-scale{args.scale:g}.json",
+    )
 
 
 def run_untraced(spark, args, work: str, session_s: float, tally: Tally) -> tuple[dict, int]:
@@ -190,8 +229,11 @@ def run_untraced(spark, args, work: str, session_s: float, tally: Tally) -> tupl
     (most of its 10-20 s), and repeating it would not fit the benchmark's
     time budget. Further operations run for WARMUP_SECONDS untimed, because
     the operation time keeps falling for several seconds after the first
-    (JIT compilation, first touch of worker memory)."""
-    from perfbench.procstat import tree_peak_rss_mb
+    (JIT compilation, first touch of worker memory).
+
+    Peak memory is the largest proportional resident set of the process
+    tree (procstat.tree_pss_mb) over samples taken after set-up and after
+    every operation."""
     from perfbench.workloads import OFF
 
     t0 = time.perf_counter()
@@ -199,8 +241,9 @@ def run_untraced(spark, args, work: str, session_s: float, tally: Tally) -> tupl
     build_s = time.perf_counter() - t0
     attempt(tally, f"{args.workload} first operation", lambda: (None, wl.setup_problems + wl.check(wl.run(0, OFF), 0)))
     first_s = time.perf_counter() - t0 - build_s
-    closed_loop(wl, WARMUP_SECONDS, [OFF], tally)
-    lat = closed_loop(wl, args.seconds, [OFF], tally)[0]
+    memory = [tree_pss_mb()]
+    closed_loop(wl, WARMUP_SECONDS, [OFF], tally, memory)
+    lat = closed_loop(wl, args.seconds, [OFF], tally, memory)[0]
     tally.add("determinism across runs", guard_counts(counts_record(args.workload, args), wl.counts))
     if not lat:
         raise RuntimeError("no operation completed")
@@ -213,7 +256,7 @@ def run_untraced(spark, args, work: str, session_s: float, tally: Tally) -> tupl
         "setup_s": session_s + build_s + first_s,
         "mb_per_s": wl.data_mb / statistics.median(lat),
         "stored_bytes_per_input_byte": wl.counts["stored_bytes"] / wl.pages.input_bytes,
-        "peak_rss_mb": tree_peak_rss_mb(),
+        "peak_rss_mb": max(memory),
     }, len(lat)
 
 
@@ -247,8 +290,9 @@ def run_traced(spark, args, work: str, tally: Tally) -> dict:
         tally.add(f"{name} determinism across runs", guard_counts(counts_record(name, args), wl.counts))
     off, on = closed_loop(wls[args.workload], args.seconds, [OFF, tracer], tally)
     if off and on:
-        metrics["trace.overhead_frac"] = statistics.median(on) / statistics.median(off) - 1
+        metrics["trace.overhead_ratio"] = statistics.median(on) / statistics.median(off)
     metrics["trace.spans"] = len(tracer.spans)
+    metrics.update(jvm_memory(spark))
 
     out = os.path.join(ROOT, ".perfbench_out")
     os.makedirs(out, exist_ok=True)
@@ -263,6 +307,21 @@ def run_traced(spark, args, work: str, tally: Tally) -> dict:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines), file=sys.stderr)
     return metrics
+
+
+def jvm_memory(spark) -> dict:
+    """Time the driver JVM spent in garbage collection, and the sum of its
+    heap pools' peak use, from its management beans. With the heap capped
+    (DRIVER_MEM), a JVM-side memory regression shows here first."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return {
+        "jvm.gc_s": sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans()) / 1e3,
+        "jvm.heap_peak_mb": sum(
+            p.getPeakUsage().getUsed()
+            for p in mf.getMemoryPoolMXBeans()
+            if p.getType().toString() == "Heap memory"
+        ) / 2**20,
+    }
 
 
 def stop_spark(spark) -> None:
@@ -298,8 +357,6 @@ def main(argv=None) -> int:
     if args.seconds <= 0 or args.scale <= 0:
         print("perfbench: --seconds and --scale must be positive", file=sys.stderr)
         return 2
-    if ROOT not in sys.path:
-        sys.path.insert(0, ROOT)
     work = os.path.join(ROOT, ".perfbench_work", f"{args.workload}-{os.getpid()}")
     sandbox(work)
     tally = Tally()
@@ -314,10 +371,8 @@ def main(argv=None) -> int:
         if spark is not None:
             stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
-    from perfbench.spec import END_TO_END, PER_LAYER
-
-    spec = PER_LAYER if args.trace else END_TO_END
-    missing = sorted(set(spec) - set(metrics))
+    units = spec.PER_LAYER if args.trace else spec.END_TO_END
+    missing = sorted(set(units) - set(metrics))
     if missing:
         print(f"perfbench: no value for {missing}", file=sys.stderr)
         return 1
@@ -331,7 +386,7 @@ def main(argv=None) -> int:
         "correct": tally.failed == 0,
         "attempted": tally.attempted,
         "failed": tally.failed,
-        "metrics": {k: {"value": metrics[k], "unit": spec[k][0]} for k in spec},
+        "metrics": {k: {"value": metrics[k], "unit": u} for k, u in units.items()},
     }
     print(json.dumps(result), flush=True)
     return 0

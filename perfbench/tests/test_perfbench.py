@@ -1,5 +1,6 @@
 """The benchmark's own tests: a small run of every workload through the
-command line, the failure accounting, and BENCHMARK.json against spec.py.
+command line, the failure accounting, the determinism record and
+BENCHMARK.json against the benchmark contract.
 
     python3 -m pytest perfbench/tests -q
 
@@ -21,7 +22,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 sys.path.insert(0, ROOT)
 
 from perfbench import spec  # noqa: E402
-from perfbench.run import Tally, guard_counts  # noqa: E402
+from perfbench.run import Tally, code_version, guard_counts  # noqa: E402
 from perfbench.trace import Tracer  # noqa: E402
 
 SMALL = ["--seed", "3", "--seconds", "1", "--scale", "0.05"]
@@ -39,13 +40,13 @@ def _result(proc: subprocess.CompletedProcess) -> dict:
     return json.loads(proc.stdout.strip().splitlines()[-1])
 
 
-@pytest.mark.parametrize("workload", sorted(spec.WORKLOADS))
+@pytest.mark.parametrize("workload", spec.WORKLOADS)
 def test_small_run_prints_every_end_to_end_metric(workload):
     res = _result(_cli(["--workload", workload, "--trace", "0", *SMALL]))
     assert set(res) == {"correct", "attempted", "failed", "metrics"}
     assert res["correct"] is True and res["failed"] == 0 and res["attempted"] >= 1
     assert set(res["metrics"]) == set(spec.END_TO_END)
-    for name, (unit, _) in spec.END_TO_END.items():
+    for name, unit in spec.END_TO_END.items():
         assert res["metrics"][name]["unit"] == unit
         assert res["metrics"][name]["value"] > 0, name
 
@@ -56,8 +57,9 @@ def test_traced_run_prints_every_per_layer_metric_and_writes_spans():
     res = _result(_cli(["--workload", "scan", "--trace", "1", *SMALL]))
     assert res["correct"] is True and res["failed"] == 0
     assert set(res["metrics"]) == set(spec.PER_LAYER)
-    for name, (unit, _, _) in spec.PER_LAYER.items():
+    for name, unit in spec.PER_LAYER.items():
         assert res["metrics"][name]["unit"] == unit
+        assert res["metrics"][name]["value"] > 0, name
     new = sorted(set(os.listdir(out)) - before)
     spans = [f for f in new if f.startswith("spans-scan-") and f.endswith(".jsonl")]
     assert spans, new
@@ -89,6 +91,39 @@ def test_corrupted_expected_fingerprint_counts_as_failed(monkeypatch, tmp_path):
         run.stop_spark(spark)
 
 
+def test_dedup_check_fails_on_a_wrong_cluster_label(monkeypatch, tmp_path):
+    from pyspark.sql import functions as F
+
+    from hadoop_etl_udfs_spark.operators.dedup import (
+        duplicate_clusters_star,
+        lsh_band_pairs,
+        minhash_signatures,
+    )
+    from perfbench import run
+
+    for var in ("TMPDIR", "SPARK_LOCAL_DIRS", "SPARK_GRAFT_DRIVER_MEM", "PYTHONPATH"):
+        monkeypatch.setenv(var, os.environ.get(var, ""))
+    work = str(tmp_path / "work")
+    run.sandbox(work)
+    spark, _ = run.start_spark(work)
+    try:
+        dd = run.build("dedup", spark, work, seed=3, scale=0.05)
+        pairs = lsh_band_pairs(minhash_signatures(dd.corpus)).localCheckpoint()
+        stats: dict = {}
+        clusters = duplicate_clusters_star(pairs, stats=stats).localCheckpoint()
+        together, problems = dd.check(pairs, clusters, stats)
+        assert problems == [] and together >= 1
+        victim = clusters.agg(F.max("doc_id")).collect()[0][0]
+        wrong = clusters.withColumn(
+            "cluster_rep",
+            F.when(F.col("doc_id") == victim, F.col("cluster_rep") + 1).otherwise(F.col("cluster_rep")),
+        )
+        _, problems = dd.check(pairs, wrong, stats)
+        assert any("connected components" in p for p in problems), problems
+    finally:
+        run.stop_spark(spark)
+
+
 def test_outside_a_checkout_exits_nonzero_without_a_result(tmp_path):
     shutil.copy(os.path.join(ROOT, "BENCHMARK.json"), tmp_path)
     shutil.copytree(
@@ -105,6 +140,17 @@ def test_determinism_guard_fails_on_drift(tmp_path):
     assert guard_counts(path, {"chunks": 8, "stored_bytes": 100}) == []
     assert guard_counts(path, {"chunks": 8, "stored_bytes": 100}) == []
     assert guard_counts(path, {"chunks": 8, "stored_bytes": 101})
+
+
+def test_determinism_record_is_kept_per_code_version(tmp_path):
+    for top in ("hadoop_etl_udfs_spark", "perfbench"):
+        (tmp_path / top).mkdir()
+        (tmp_path / top / "m.py").write_text("x = 1\n")
+    before = code_version(str(tmp_path))
+    (tmp_path / "hadoop_etl_udfs_spark" / "notes.txt").write_text("not code")
+    assert code_version(str(tmp_path)) == before
+    (tmp_path / "hadoop_etl_udfs_spark" / "m.py").write_text("x = 2\n")
+    assert code_version(str(tmp_path)) != before
 
 
 def test_tracer_self_time_excludes_children():
@@ -126,19 +172,12 @@ def test_tracer_self_time_excludes_children():
     assert off.spans == []
 
 
-def test_benchmark_json_matches_spec_and_contract():
+def test_benchmark_json_meets_the_contract():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         b = json.load(f)
     assert set(b) == {"command", "paths", "run_seconds", "workloads", "end_to_end", "per_layer"}
     assert b["paths"] == ["perfbench"] and b["command"] == ["python3", "perfbench/run.py"]
     assert isinstance(b["run_seconds"], int) and 1 <= b["run_seconds"] <= 60
-    assert {w["name"]: w["why"] for w in b["workloads"]} == spec.WORKLOADS
-    assert {
-        m["name"]: (m["unit"], m["better"], m["bound"]) for m in b["end_to_end"]
-    } == {k: (*v, spec.BOUNDS[k]) for k, v in spec.END_TO_END.items()}
-    assert {m["name"]: (m["unit"], m["better"]) for m in b["per_layer"]} == {
-        k: v[:2] for k, v in spec.PER_LAYER.items()
-    }
     names = [m["name"] for m in b["end_to_end"] + b["per_layer"] + b["workloads"]]
     assert len(names) == len(set(names))
     for n in names:
@@ -147,5 +186,8 @@ def test_benchmark_json_matches_spec_and_contract():
         assert re.fullmatch(r"[A-Za-z0-9_/%.-]{1,16}", m["unit"]), m
         assert m["better"] in ("higher", "lower")
     assert all(0 < m["bound"] <= 0.25 for m in b["end_to_end"])
-    assert max(spec.BOUNDS.values()) == spec.BOUNDS["setup_s"]
+    bounds = {m["name"]: m["bound"] for m in b["end_to_end"]}
+    assert max(bounds.values()) == bounds["setup_s"]
     assert all(len(w["why"]) <= 200 and "\n" not in w["why"] for w in b["workloads"])
+    # every per-layer metric says which end-to-end metric it should move
+    assert set(spec.MOVES) == set(spec.PER_LAYER)
