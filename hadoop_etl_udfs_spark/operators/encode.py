@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codecs.api import decode_array, encode_array
+from ..codecs.frame import CorruptChunkError
 
 ENCODED_SCHEMA = (
     "chunk_id long, column string, col_idx int, n_rows long, codec string, "
@@ -404,20 +405,7 @@ def subset_schema(columns, full_schema: str | None = None) -> str:
 
 def _expected_arrow_fields(ddl_or_struct) -> list[tuple[str, pa.DataType]]:
     """Ordered (name, arrow type) pairs the Python UDF verifier expects for
-    the decode output schema — the anchor for two portability behaviors:
-
-    - **timezone alignment**: chunk meta records the tz the WRITER
-      session's Arrow batches carried (e.g. ``Etc/UTC`` under a bare
-      spark-submit session); the grouped-UDF verifier always expects
-      pyspark's canonical ``tz=UTC`` (``to_arrow_type(timestamp_utc=True)``).
-      The stored values are absolute epoch-µs either way, so aligning is a
-      metadata-only cast.
-    - **schema evolution on the engine's own sink**: decode emits exactly
-      these fields — requested columns missing from an old sink come back
-      all-NULL (the reference's pre-evolution-file semantics,
-      tests/test_formats.py evolution test, applied to the chunk sink),
-      and sink columns not requested are skipped without decoding.
-    """
+    the decode output schema — the ``exp_fields`` of :func:`_assemble_chunk`."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
@@ -429,10 +417,74 @@ def _expected_arrow_fields(ddl_or_struct) -> list[tuple[str, pa.DataType]]:
     return [(f.name, f.type) for f in to_arrow_schema(st)]
 
 
-def _type_align(arr: pa.Array, want: pa.DataType | None) -> pa.Array:
-    if want is not None and arr.type != want:
-        return arr.cast(want)
-    return arr
+def _type_align(arr: pa.Array, want: pa.DataType) -> pa.Array:
+    return arr if arr.type == want else arr.cast(want)
+
+
+def _column_rows(batch, *extra: str) -> Iterator[tuple]:
+    """(*extra, column, meta, payload, n_rows) per row of an encoded Arrow
+    batch or table — the row form :func:`_assemble_chunk` takes, each
+    column read once, not per cell."""
+    fields = extra + ("column", "meta", "payload", "n_rows")
+    return zip(*(batch.column(c).to_pylist() for c in fields))
+
+
+def _assemble_chunk(
+    chunk_id: int,
+    rows,
+    exp_fields: list[tuple[str, pa.DataType]],
+    global_dicts: dict,
+) -> list[pa.Array]:
+    """One chunk's ``(column, meta, payload, n_rows)`` rows -> its arrays in
+    ``exp_fields`` order. Every decode path goes through here, so each
+    per-chunk decision is made once:
+
+    - **duplicates**: a resume over drifted input can append a chunk twice;
+      copies are content-identical by the chunk-id contract, so the first
+      copy of a column is decoded and later ones dropped.
+    - **schema evolution on the engine's own sink**: sink columns the
+      schema does not request are skipped without decoding; requested
+      columns the chunk lacks come back all-NULL (the reference's
+      pre-evolution-file semantics, tests/test_formats.py evolution test,
+      applied to the chunk sink).
+    - **zero overlap** between the schema and the chunk raises: most likely
+      a misspelled schema, and an all-NULL result would be the
+      silent-wrong-answer failure mode. (On a mixed-version sink, asking
+      for ONLY post-evolution columns also lands here for pre-evolution
+      chunks: include an anchor column, e.g. the key.) A misspelled name
+      ALONGSIDE correct ones is indistinguishable from an evolved column
+      by construction, so partial overlap is NULL-filled.
+    - **timezone alignment**: chunk meta records the tz the WRITER
+      session's Arrow batches carried (e.g. ``Etc/UTC`` under a bare
+      spark-submit session); the UDF verifier expects pyspark's canonical
+      ``tz=UTC``. The stored values are absolute epoch-µs either way, so
+      aligning is a metadata-only cast.
+    - **row count**: a decoded column whose length is not its row's
+      ``n_rows`` raises :class:`CorruptChunkError`.
+    """
+    want = dict(exp_fields)
+    got: dict[str, pa.Array] = {}
+    sink_cols = set()
+    for name, meta, payload, n_rows in rows:
+        sink_cols.add(name)
+        if name in got or name not in want:
+            continue
+        arr = decode_array(payload, meta, global_dict=global_dicts.get(name))
+        if len(arr) != n_rows:
+            raise CorruptChunkError(
+                f"chunk {chunk_id} column {name!r}: decoded {len(arr)} rows, "
+                f"its row says n_rows={n_rows}"
+            )
+        got[name] = _type_align(arr, want[name])
+    if not got:
+        raise ValueError(
+            f"none of the requested output columns {sorted(want)} exist in "
+            f"chunk {chunk_id} (sink columns: {sorted(sink_cols)}) — "
+            "misspelled schema, or a pre-evolution chunk asked for only "
+            "post-evolution columns (include an anchor column)"
+        )
+    n = len(next(iter(got.values())))
+    return [got[c] if c in got else pa.nulls(n, ty) for c, ty in exp_fields]
 
 
 def decode_chunks(
@@ -442,57 +494,20 @@ def decode_chunks(
 
     Grouped by chunk_id so a chunk's column rows reunite wherever they are
     (survives parquet round trips and splits); Arrow-native the whole way
-    (applyInArrow, Spark >= 4.0). Decodes sinks written by sessions with a
-    different timezone, fills schema-evolved columns absent from the sink
-    with NULLs, and skips sink columns the schema doesn't request (see
-    :func:`_expected_arrow_fields`).
+    (applyInArrow, Spark >= 4.0). Duplicate copies, schema evolution and
+    writer-session timezones are handled per chunk by :func:`_assemble_chunk`.
     """
     from ..sources.pages import PAGES_SCHEMA
 
     out_schema = schema or PAGES_SCHEMA
     gd_bc = enc.sparkSession.sparkContext.broadcast(global_dicts or {})
     exp_fields = _expected_arrow_fields(out_schema)
-    exp_names = {n for n, _ in exp_fields}
+    names = [n for n, _ in exp_fields]
 
     def decode(table: pa.Table) -> pa.Table:
-        gds = gd_bc.value
-        t = table.sort_by("col_idx")
-        got: dict[str, pa.Array] = {}
-        n_rows = t.column("n_rows")[0].as_py() if t.num_rows else 0
-        for row in range(t.num_rows):
-            name = t.column("column")[row].as_py()
-            if name in got or name not in exp_names:
-                # duplicated sink (resume over drifted input appended the
-                # chunk twice — copies are content-identical by the chunk-id
-                # contract: decode the first, drop the rest), or a sink
-                # column the output schema doesn't request (pay no decode)
-                continue
-            payload = t.column("payload")[row].as_py()
-            meta = t.column("meta")[row].as_py()
-            got[name] = decode_array(payload, meta, global_dict=gds.get(name))
-        if t.num_rows and not got:
-            # zero overlap between the requested schema and this chunk's
-            # columns: most likely a misspelled schema — an all-NULL result
-            # would be the silent-wrong-answer failure mode. (On a
-            # mixed-version sink, requesting ONLY post-evolution columns
-            # also lands here for pre-evolution chunks: include an anchor
-            # column that exists in every chunk, e.g. the key.) Partial
-            # overlap is treated as evolution and NULL-filled — a misspelled
-            # name ALONGSIDE correct ones is indistinguishable from an
-            # evolved column by construction.
-            raise ValueError(
-                "none of the requested output columns "
-                f"{sorted(n for n, _ in exp_fields)} exist in this chunk "
-                f"(sink columns: {sorted(set(t.column('column').to_pylist()))})"
-                " — misspelled schema, or a pre-evolution chunk asked for "
-                "only post-evolution columns (include an anchor column)"
-            )
-        return pa.table(
-            {
-                n: _type_align(got[n], ty) if n in got else pa.nulls(n_rows, ty)
-                for n, ty in exp_fields
-            }
-        )
+        cid = table.column("chunk_id")[0].as_py()
+        arrays = _assemble_chunk(cid, _column_rows(table), exp_fields, gd_bc.value)
+        return pa.Table.from_arrays(arrays, names=names)
 
     return enc.groupBy("chunk_id").applyInArrow(decode, out_schema)
 
@@ -513,19 +528,16 @@ def decode_chunks_colocated(
     Raises :class:`IncompleteChunkError` if a chunk arrives incomplete (wrong
     read settings) — fall back to :func:`decode_chunks` then.
 
-    Duplicated sinks (resume over drifted input appended a chunk twice):
-    same-partition copies are dropped via a seen-set; copies in *different*
-    files cannot be deduped without a shuffle — check
+    Duplicated sinks: same-partition copies are dropped via a seen-set;
+    copies in *different* files cannot be deduped without a shuffle — check
     ``plans.lineage.sink_has_duplicates`` first and use :func:`decode_chunks`
-    (which dedupes inside the group) when it returns True, as jobs/decode_job
-    does.
+    when it returns True, as jobs/decode_job does.
 
     ``n_columns`` is the SINK's column count (group completion is counted
     against it) and must match the sink's true uniform arity — a mismatch
     in either direction raises :class:`IncompleteChunkError` rather than
-    silently dropping or NULLing columns. The output follows ``schema``,
-    with evolution semantics as in :func:`decode_chunks` (missing columns
-    NULL, extra sink columns skipped without decoding). Mixed-ARITY sinks
+    silently dropping or NULLing columns. The output follows ``schema``
+    (evolution semantics in :func:`_assemble_chunk`). Mixed-ARITY sinks
     (chunks appended before and after a schema evolution) have no single
     n_columns: decode those with :func:`decode_chunks`.
     """
@@ -534,28 +546,21 @@ def decode_chunks_colocated(
     out_schema = schema or PAGES_SCHEMA
     gd_bc = enc.sparkSession.sparkContext.broadcast(global_dicts or {})
     exp_fields = _expected_arrow_fields(out_schema)
-    exp_types = dict(exp_fields)
+    names = [n for n, _ in exp_fields]
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         gds = gd_bc.value
         pending: dict[int, list] = {}
         seen: set[int] = set()
         for batch in batches:
-            cid_col = batch.column(batch.schema.get_field_index("chunk_id"))
-            idx_col = batch.column(batch.schema.get_field_index("col_idx"))
-            name_col = batch.column(batch.schema.get_field_index("column"))
-            meta_col = batch.column(batch.schema.get_field_index("meta"))
-            nrows_col = batch.column(batch.schema.get_field_index("n_rows"))
-            payload_col = batch.column(batch.schema.get_field_index("payload"))
-            for row in range(batch.num_rows):
-                cid = cid_col[row].as_py()
+            for cid, idx, *row in _column_rows(batch, "chunk_id", "col_idx"):
                 if cid in seen:
                     # a duplicate COPY re-sends col_idx < n_columns; a row
                     # with col_idx >= n_columns means the sink's chunks have
                     # MORE columns than n_columns claims — emitting already
                     # happened, so dropping it would silently NULL a column
                     # that exists (evolved sink decoded with a stale arity)
-                    if idx_col[row].as_py() >= n_columns:
+                    if idx >= n_columns:
                         raise IncompleteChunkError(
                             f"chunk {cid} arrived incomplete: sink chunks "
                             f"carry more than n_columns={n_columns} columns "
@@ -564,17 +569,9 @@ def decode_chunks_colocated(
                         )
                     continue  # same-partition duplicate copy
                 group = pending.setdefault(cid, [])
-                group.append(
-                    (
-                        idx_col[row].as_py(),
-                        name_col[row].as_py(),
-                        meta_col[row].as_py(),
-                        payload_col[row].as_py(),
-                        nrows_col[row].as_py(),
-                    )
-                )
+                group.append((idx, row))
                 if len(group) == n_columns:
-                    if {idx for (idx, *_) in group} != set(range(n_columns)):
+                    if {idx for idx, _ in group} != set(range(n_columns)):
                         # duplicated col_idx rows (torn partial copy before
                         # a full copy) or col_idx beyond n_columns (sink
                         # arity larger than claimed) — emitting would
@@ -585,33 +582,14 @@ def decode_chunks_colocated(
                             "n_columns smaller than the sink's arity) — "
                             "use decode_chunks()"
                         )
-                    got = {
-                        nm: _type_align(
-                            decode_array(p, m, global_dict=gds.get(nm)),
-                            exp_types[nm],
-                        )
-                        for (_, nm, m, p, _) in group
-                        if nm in exp_types
-                    }
-                    if not got:
-                        # zero schema overlap = misspelled schema (see
-                        # decode_chunks) — never emit an all-NULL chunk
-                        raise ValueError(
-                            "none of the requested output columns "
-                            f"{sorted(exp_types)} exist in chunk {cid} "
-                            f"(sink columns: "
-                            f"{sorted(nm for (_, nm, *_) in group)})"
-                        )
-                    chunk_rows = group[0][4]
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            got[n] if n in got else pa.nulls(chunk_rows, ty)
-                            for n, ty in exp_fields
-                        ],
-                        names=[n for n, _ in exp_fields],
-                    )
                     del pending[cid]
                     seen.add(cid)
+                    yield pa.RecordBatch.from_arrays(
+                        _assemble_chunk(
+                            cid, [r for _, r in group], exp_fields, gds
+                        ),
+                        names=names,
+                    )
         if pending:
             raise IncompleteChunkError(
                 f"{len(pending)} chunk(s) arrived incomplete — the sink was "
@@ -620,13 +598,6 @@ def decode_chunks_colocated(
             )
 
     return enc.mapInArrow(decode, out_schema)
-
-
-def lineage_rows(enc: DataFrame) -> DataFrame:
-    """Per column-chunk lineage/metrics view (drops payloads)."""
-    return enc.select(
-        "chunk_id", "column", "n_rows", "codec", "bytes_in", "bytes_out", "crc32"
-    )
 
 
 def codec_metrics(enc: DataFrame) -> DataFrame:

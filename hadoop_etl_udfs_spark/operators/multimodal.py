@@ -26,19 +26,6 @@ FEATURE_SCHEMA = (
 )
 
 
-def html_metadata(pages: DataFrame) -> DataFrame:
-    """Typed metadata over the opaque html column — pure built-ins
-    (octet_length, magic-byte probe via substring compare)."""
-    magic = F.when(
-        F.substring(F.col("html").cast("string"), 1, 9) == "<!DOCTYPE", "html"
-    ).otherwise("unknown")
-    return pages.select(
-        "url",
-        F.octet_length("html").alias("n_bytes"),
-        magic.alias("magic"),
-    )
-
-
 def decode_image_stub(payload: bytes) -> None:
     """Placeholder for a real image decode (PIL/libjpeg not in container)."""
     raise NotImplementedError(

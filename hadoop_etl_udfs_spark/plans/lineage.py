@@ -715,10 +715,10 @@ def delete_from_sink(
     import pyarrow as pa
     from pyspark.sql.types import StructType
 
-    from ..codecs.api import decode_array
     from ..operators.encode import (
+        _assemble_chunk,
+        _column_rows,
         _expected_arrow_fields,
-        _type_align,
         decode_chunks,
         encode_pages,
         subset_schema,
@@ -747,24 +747,12 @@ def delete_from_sink(
     # --- 1. key-column-only decode, chunk_id kept: (chunk_id, __key) ---
     key_ddl = subset_schema([key_column], schema)
     key_type = StructType.fromDDL(key_ddl).fields[0].dataType.simpleString()
-    want_arrow = _expected_arrow_fields(key_ddl)[0][1]
+    key_fields = _expected_arrow_fields(key_ddl)
     gd_bc = spark.sparkContext.broadcast(global_dicts or {})
 
     def _kdec(tbl: pa.Table) -> pa.Table:
-        if tbl.num_rows == 0:
-            return pa.table(
-                {"chunk_id": pa.array([], pa.int64()),
-                 "__key": pa.nulls(0, want_arrow)}
-            )
-        arr = _type_align(
-            decode_array(
-                tbl.column("payload")[0].as_py(),
-                tbl.column("meta")[0].as_py(),
-                global_dict=gd_bc.value.get(key_column),
-            ),
-            want_arrow,
-        )
         cid = tbl.column("chunk_id")[0].as_py()
+        (arr,) = _assemble_chunk(cid, _column_rows(tbl), key_fields, gd_bc.value)
         return pa.table(
             {"chunk_id": pa.array([cid] * len(arr), pa.int64()),
              "__key": arr}

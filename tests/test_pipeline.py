@@ -412,11 +412,8 @@ def test_decode_schema_evolution_on_chunk_sink(spark):
     enc = encode_pages(pages, shuffle=False).cache()
     evolved = PAGES_SCHEMA + ", quality double"
     try:
-        for dec in (
-            decode_chunks(enc, schema=evolved),
-            decode_chunks_colocated(enc, schema=evolved),
-        ):
-            got = dec.cache()
+        for decode in (decode_chunks, decode_chunks_colocated):
+            got = decode(enc, schema=evolved).cache()
             assert got.count() == 300
             assert got.filter(F.col("quality").isNotNull()).count() == 0
             fp_cols = ["url", "warc_ts", "html", "text", "lang"]
@@ -425,14 +422,17 @@ def test_decode_schema_evolution_on_chunk_sink(spark):
             ).collect()[0]["h"]
             assert fp(got) == fp(pages)  # surviving columns bit-identical
             got.unpersist()
-        # narrowed schema: only the 2 requested sink columns decode
-        proj = decode_chunks(enc, schema="url string, lang string")
-        assert proj.columns == ["url", "lang"] and proj.count() == 300
-        # zero schema overlap = misspelled schema, never an all-NULL result
-        import pytest
-
-        with pytest.raises(Exception, match="none of the requested"):
-            decode_chunks(enc, schema="urll string, langg string").collect()
+            # narrowed schema: only the 2 requested sink columns decode
+            proj = decode(enc, schema="url string, lang string")
+            assert proj.columns == ["url", "lang"] and proj.count() == 300
+            # zero schema overlap = misspelled schema, never an all-NULL
+            # result; the one message names the chunk and its sink columns
+            with pytest.raises(
+                Exception,
+                match=r"none of the requested .* exist in chunk -?\d+ "
+                r"\(sink columns: \['html', 'lang', 'text', 'url', 'warc_ts'\]\)",
+            ):
+                decode(enc, schema="urll string, langg string").collect()
         # mixed-version sink: chunks of 5 and 6 columns appended together
         evolved_pages = pages.limit(50).withColumn(
             "quality", F.length("text").cast("double")
@@ -477,6 +477,30 @@ def test_colocated_decode_rejects_wrong_sink_arity(spark, tmp_path):
     # over-specified arity is loud too (groups never complete)
     with pytest.raises(Exception, match="arrived incomplete"):
         decode_chunks_colocated(enc, schema=schema6, n_columns=7).collect()
+
+
+def test_mislabelled_n_rows_raises_on_both_decode_paths(spark, tmp_path):
+    """A column row whose n_rows disagrees with its payload is a corrupt
+    chunk: both decode paths raise naming the chunk and the column, when
+    every column is requested and when another one is NULL-filled."""
+    from hadoop_etl_udfs_spark.operators.encode import decode_chunks_colocated
+    from hadoop_etl_udfs_spark.sources.pages import PAGES_SCHEMA
+
+    out = str(tmp_path / "sink")
+    pages = synthesize_pages(spark, 200, seed=29).coalesce(1)
+    lineage.write_encoded(encode_pages(pages, shuffle=False), out)
+    enc = lineage.read_encoded_colocated(spark, out)
+    cid = enc.select("chunk_id").first()["chunk_id"]
+    doomed = (F.col("chunk_id") == cid) & (F.col("column") == "lang")
+    bad = enc.withColumn(
+        "n_rows", F.when(doomed, F.col("n_rows") + 1).otherwise(F.col("n_rows"))
+    )
+    for decode in (decode_chunks, decode_chunks_colocated):
+        for schema in (PAGES_SCHEMA, PAGES_SCHEMA + ", quality double"):
+            with pytest.raises(
+                Exception, match=rf"CorruptChunkError: chunk {cid} column 'lang'"
+            ):
+                decode(bad, schema=schema).collect()
 
 
 def test_embeddings_table_encodes_and_decodes_bit_identical(spark):
